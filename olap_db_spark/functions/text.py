@@ -51,13 +51,6 @@ def _any_eq(w: Column, markers: tuple[str, ...]) -> Column:
     return out
 
 
-def stopword_ratio(text: Column, markers: tuple[str, ...]) -> Column:
-    """hits / tokens as one exact-int division (deterministic double)."""
-    return stopword_hits(text, markers).cast("double") / token_count_ws(
-        text
-    ).cast("double")
-
-
 def lang_id(text: Column) -> Column:
     """Deterministic marker-count language heuristic with alphabetical
     tie-break (ties go to the earlier language code)."""

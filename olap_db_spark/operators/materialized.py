@@ -50,16 +50,11 @@ def refresh_daily_rollup(
     parts = [r[0] for r in fresh.select("day").distinct().collect()]
     if not parts:
         return []
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(conf_key, "static")
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        (
-            fresh.localCheckpoint()  # never overwrite a path being read
-            .write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(sink_path)
-        )
-    finally:
-        spark.conf.set(conf_key, old)
+    (
+        fresh.localCheckpoint()  # never overwrite a path being read
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day")
+        .parquet(sink_path)
+    )
     return parts

@@ -67,80 +67,23 @@ _LOADED = False
 # order); everything else follows in registration order.
 #
 _PRIORITY: tuple[str, ...] = (
-    # ROUND-13 WINDOW (first 50 reach the driver) — stale-row rotation,
-    # executing the r12 rotation plan (r12 VERDICT #8). After
-    # CORRECTNESS_r12 landed (50/50 green, the seventh consecutive
-    # fully-green round), the staleness map is: 21 rows' latest green is
-    # round 9 (the r12 deferred tail — they lead this window, as
-    # promised), 50 rows' latest green is round 10. No red rows, no
-    # never-checked rows. The window = the 21 r9 rows + the 29 most
-    # drift-exposed r10 rows; the remaining 21 r10 rows defer to round 14
-    # (listed at the bottom — they MUST lead the next rotation).
+    # ROUND-14 WINDOW (first 50 reach the driver). After CORRECTNESS_r13
+    # (50/50 green) the staleness map is: 21 rows' latest green is round
+    # 10 (the r13 deferred tail), 50 rows' latest green is round 11, and
+    # the rest are round 12/13.
     #
-    # Tier 1 — the 21 rows whose latest green is round 9 (the rotation
+    # Tier 0 — restructured in round 13 but outside its window (r13
+    # VERDICT "Next round" #1): the PageRank iteration fold, and the IVF/PQ
+    # eval twins plus sim_ivf_kmeans, which now read the fitted and
+    # checkpointed frames.
+    "graph_pagerank_purchases",
+    "sim_ivf_eval",
+    "sim_ivf_eval_sampled",
+    "sim_pq_eval",
+    "sim_pq_eval_sampled",
+    "sim_ivf_kmeans",
+    # Tier 1 — the 21 rows whose latest green is round 10 (the rotation
     # tripwire's must-have set).
-    "agg_collect_set",
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_grouping_id",
-    "agg_grouping_sets",
-    "agg_hll_intersect",
-    "agg_weighted_avg_pandas",
-    "func_math_family",
-    "setop_except",
-    "setop_except_all",
-    "text_bigram_lm_nll",
-    "text_bigram_nll_topk",
-    "text_bm25_topk",
-    "text_domain_kl",
-    "text_hybrid_rrf",
-    "text_repetition_stats",
-    "meta_select_one",
-    "sample_bernoulli",
-    "sample_stratified",
-    "scale_zorder_layout",
-    "ts_user_lifetime",
-    # Tier 2 — 29 of the 50 r10 rows, most drift-exposed first: the
-    # entire k-means-fit family this round's optimizer restructures
-    # (full-frame assignment — sim_ivf_search/refresh, hybrid RRF, the
-    # PQ routes), the banded/graph dedup chain riding the r12
-    # checkpoints, Python-worker rows, and the remaining plan-sensitive
-    # join/aggregate shapes.
-    "sim_ivf_search",
-    "sim_ivf_refresh",
-    "sim_hybrid_rrf_ivf",
-    "sim_pq_search",
-    "sim_pq_refresh",
-    "sim_knn_bruteforce",
-    "sim_ann_lsh",
-    "dedup_cluster_best",
-    "dedup_components",
-    "dedup_lsh_eval",
-    "dedup_lsh_incremental",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_incremental",
-    "dedup_keep_latest",
-    "dedup_distinct",
-    "mm_decode_resize_stats",
-    "agg_heavy_hitters",
-    "agg_quantiles",
-    "agg_approx_count_distinct",
-    "text_contamination_check",
-    "text_dsir_select",
-    "text_domain_cap",
-    "text_pack_sequences",
-    "ts_rollup_incremental",
-    "scale_interval_bucket_join",
-    "fuzzy_levenshtein_match",
-    # Deferred-to-round-14 r10 tail (stale there; they lead the next
-    # rotation): pure-expression aggregate/window forms, scalar func
-    # families, cross join, metadata probes, three single-join TPC-H
-    # revenue rows and four set-ops — all shapes with dedicated pytest +
-    # fuzz coverage and no plan sensitivity. Still priority-ordered so
-    # they lead the next rotation.
     "agg_argmax_family",
     "agg_histogram",
     "agg_hll_mergeable",
@@ -162,6 +105,31 @@ _PRIORITY: tuple[str, ...] = (
     "setop_intersect_all",
     "setop_union_all",
     "setop_union_distinct",
+    # Tier 2 — 23 of the 48 other round-11 rows, in registration order; the
+    # remaining 25 lead the next rotation.
+    "agg_corr_covar",
+    "agg_median_exact",
+    "agg_sum_map",
+    "window_ranking",
+    "window_running_sum",
+    "window_lag_lead",
+    "func_url_normalize",
+    "func_split_key_epoch",
+    "func_json_extract",
+    "func_explode_wordcount",
+    "func_string_family",
+    "func_date_family",
+    "func_regexp_family",
+    "ts_tumbling_window",
+    "ts_sliding_window",
+    "ts_session_window",
+    "ts_asof_prior_click",
+    "ts_daily_rollup",
+    "ts_gap_fill",
+    "ts_funnel",
+    "ts_cohort_retention",
+    "ts_sequence_match",
+    "join_asof_nearest",
 )
 
 

@@ -14,14 +14,16 @@ the SAME HTTP surface the reference's own clients speak, backed by
 - ``...&max_result_rows=N``         → per-request row cap (ClickHouse's
   setting of the same name; server default ``OLAP_HTTP_MAX_ROWS``)
 
-Results STREAM: rows are pulled through ``df.toLocalIterator()`` — the
-driver holds at most one partition of the result at a time, never the
-whole result set (round-2 judge finding: a ``collect()`` here made
-``SELECT * FROM lineitem`` materialize fully on the driver; ClickHouse
-streams) — and are written out with HTTP/1.1 chunked transfer encoding
-as they arrive. When the row cap truncates the result, the response
-carries ``X-Olap-Rows-Truncated: 1`` in the chunked trailer section and
-the job is cancelled via the per-request Spark job group.
+Results are COLLECTED, bounded by the row cap: every request runs
+``df.limit(max_rows + 1).collect()`` before the status line, so analysis
+AND runtime errors come back as clean 400s, and the one extra row tells
+whether the cap truncated the result. Driver memory per request is
+bounded by ``max_rows + 1`` rows (default 100 000), not by the result
+size. The rows then go out with HTTP/1.1 chunked transfer encoding, 1024
+rows per chunk, and the chunked trailer section carries
+``X-Olap-Rows-Truncated`` (``1`` when the cap cut the result) and
+``X-Olap-Rows-Sent``. A client that disconnects does not cancel its
+running Spark job; the same row cap bounds that job.
 
 Server model: a stdlib ThreadingHTTPServer on an ephemeral port. Spark
 query execution is driver-coordinated either way — an out-of-process
@@ -41,7 +43,6 @@ from __future__ import annotations
 import json
 import os
 import threading
-import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -119,9 +120,20 @@ class HttpSqlServer:
                 if data:
                     self.wfile.write(f"{len(data):x}\r\n".encode() + data + b"\r\n")
 
-            def _run(self, query: str, fmt: str, max_rows: int):
+            def _run(self, query: str, q: dict) -> None:
                 from .api import MUTATING_VERBS, classify_statement
 
+                if not query:
+                    self._reply(400, b"missing query\n")
+                    return
+                fmt = (q.get("default_format") or ["TabSeparated"])[0]
+                try:
+                    max_rows = int((q.get("max_result_rows") or [outer.max_rows])[0])
+                except ValueError:
+                    max_rows = -1
+                if max_rows < 0:
+                    self._reply(400, b"max_result_rows must be a non-negative integer\n")
+                    return
                 verb = classify_statement(query)
                 if verb in MUTATING_VERBS and not outer.allow_mutations:
                     self._reply(
@@ -131,65 +143,38 @@ class HttpSqlServer:
                         "maintenance/mutation statements\n".encode(),
                     )
                     return
-                spark = outer.engine.spark
-                group = f"http-sql-{uuid.uuid4().hex[:12]}"
-                done = object()
                 try:
                     df = outer.engine.sql(query)
                     cols = df.columns
-                    # Stream: one result partition on the driver at a time.
-                    # The job group makes the running Spark job cancellable
-                    # when the client disconnects or the row cap hits.
-                    spark.sparkContext.setJobGroup(group, query[:200], True)
-                    it = iter(df.toLocalIterator())
-                    # prime: execute the first partition BEFORE committing
-                    # to a 200, so analysis AND runtime errors surface as
-                    # clean 400s rather than a torn chunked stream
-                    first = next(it, done)
+                    # one bounded collect BEFORE the status line: the extra
+                    # row flags truncation, and every error is still a 400
+                    rows = df.limit(max_rows + 1).collect()
                 except Exception as ex:  # noqa: BLE001 - surface to client
                     self._reply(400, f"{type(ex).__name__}: {ex}\n".encode())
                     return
+                truncated = len(rows) > max_rows
+                del rows[max_rows:]
                 self.send_response(200)
                 self.send_header("Content-Type", "text/plain; charset=utf-8")
                 self.send_header("Transfer-Encoding", "chunked")
                 self.send_header("Trailer", "X-Olap-Rows-Truncated, X-Olap-Rows-Sent")
                 self.send_header("X-Olap-Rows-Limit", str(max_rows))
                 self.end_headers()
-                sent = 0
-                truncated = False
                 try:
-                    buf: list[str] = []
-                    row = first
-                    while row is not done:
-                        if sent >= max_rows:
-                            truncated = True
-                            # stop pulling partitions; kill the Spark job
-                            spark.sparkContext.cancelJobGroup(group)
-                            break
-                        buf.append(_encode_row(cols, row, fmt))
-                        sent += 1
-                        if len(buf) >= 1024:
-                            self._chunk("".join(buf).encode("utf-8"))
-                            buf.clear()
-                        row = next(it, done)
-                    self._chunk("".join(buf).encode("utf-8"))
-                except BrokenPipeError:
-                    spark.sparkContext.cancelJobGroup(group)
-                    return
-                except Exception as ex:  # noqa: BLE001 - mid-stream failure
-                    # headers are gone; do what ClickHouse does — append the
-                    # error to the body, then terminate the stream cleanly
-                    self._chunk(f"__error__: {type(ex).__name__}: {ex}\n".encode())
-                finally:
-                    spark.sparkContext.setJobGroup("", "", False)
-                try:
+                    for i in range(0, len(rows), 1024):
+                        self._chunk(
+                            "".join(
+                                _encode_row(cols, row, fmt)
+                                for row in rows[i : i + 1024]
+                            ).encode("utf-8")
+                        )
                     # last chunk + trailers
                     self.wfile.write(
                         b"0\r\n"
                         + f"X-Olap-Rows-Truncated: {int(truncated)}\r\n"
-                          f"X-Olap-Rows-Sent: {sent}\r\n\r\n".encode()
+                          f"X-Olap-Rows-Sent: {len(rows)}\r\n\r\n".encode()
                     )
-                except BrokenPipeError:
+                except (BrokenPipeError, ConnectionResetError):
                     pass
 
             def do_GET(self):  # noqa: N802
@@ -198,30 +183,22 @@ class HttpSqlServer:
                     self._reply(200, b"Ok.\n")
                     return
                 q = parse_qs(u.query)
-                query = (q.get("query") or [""])[0]
-                if not query:
-                    self._reply(400, b"missing query parameter\n")
-                    return
-                self._run(
-                    query,
-                    (q.get("default_format") or ["TabSeparated"])[0],
-                    int((q.get("max_result_rows") or [outer.max_rows])[0]),
-                )
+                self._run((q.get("query") or [""])[0], q)
 
             def do_POST(self):  # noqa: N802
-                u = urlparse(self.path)
-                q = parse_qs(u.query)
-                n = int(self.headers.get("Content-Length") or 0)
-                body = self.rfile.read(n).decode("utf-8") if n else ""
-                query = (q.get("query") or [body])[0] or body
-                if not query:
-                    self._reply(400, b"missing query\n")
+                q = parse_qs(urlparse(self.path).query)
+                try:
+                    n = int(self.headers.get("Content-Length") or 0)
+                except ValueError:
+                    n = -1
+                if n < 0:
+                    # the body's extent is unknown: answer, then drop the
+                    # connection rather than parse the body as a request
+                    self.close_connection = True
+                    self._reply(400, b"Content-Length must be a non-negative integer\n")
                     return
-                self._run(
-                    query,
-                    (q.get("default_format") or ["TabSeparated"])[0],
-                    int((q.get("max_result_rows") or [outer.max_rows])[0]),
-                )
+                body = self.rfile.read(n).decode("utf-8") if n else ""
+                self._run((q.get("query") or [body])[0] or body, q)
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self.host, self.port = self._httpd.server_address[:2]

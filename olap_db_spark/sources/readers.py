@@ -82,15 +82,6 @@ def read_ranking_urls_csv(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_json_records(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSON scan (A4). Explicit schema recommended for the same
-    two-pass-inference reason as CSV."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def jdbc_reader(
     spark: SparkSession,
     url: str,
@@ -123,10 +114,3 @@ def jdbc_reader(
             .option("upperBound", upper_bound or 1_000_000)
         )
     return reader
-
-
-def keyed_lookup_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """DynamoDB-style keyed dim (A6): modeled as a small broadcast-joinable
-    DataFrame — the reference's get_item(key) becomes a broadcast hash
-    join against the key column."""
-    return spark.createDataFrame(rows, schema)

@@ -13,27 +13,11 @@ database.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from olap_db_spark.sources._fs import fs_for
-
-
-@contextmanager
-def _dynamic_overwrite(spark: SparkSession):
-    """Scope partitionOverwriteMode=dynamic to one write (the
-    partition-scoped rewrite paths all need it; the session default must
-    not leak)."""
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(conf_key, "static")
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        yield
-    finally:
-        spark.conf.set(conf_key, old)
 
 
 def _read_parquet_if_exists(
@@ -71,20 +55,10 @@ def _stage_and_read(
     return spark.read.parquet(staging), staging
 
 
-def append_parquet(df: DataFrame, path: str) -> None:
-    """A12–A14: append batch. At scale: sized files via AQE coalescing."""
-    df.write.mode("append").parquet(path)
-
-
 def write_partitioned(df: DataFrame, path: str, *cols: str) -> None:
     """A11's `{locale}/{page}/{chunk}` layout → directory partitioning;
     readers prune partitions from the path (SURVEY.md §4.2)."""
     df.write.mode("overwrite").partitionBy(*cols).parquet(path)
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    """A9: CSV sink with header."""
-    df.write.mode("overwrite").option("header", True).csv(path)
 
 
 def write_orc(df: DataFrame, path: str) -> None:
@@ -214,8 +188,12 @@ def upsert_partition_scoped(
     # (the checkpoint unroll is what OOM'd PageRank's edge table at the
     # sf100 probe — same class). The stage is an ordinary streamed write.
     latest, staging = _stage_and_read(spark, merged, path, "._upsert_staging")
-    with _dynamic_overwrite(spark):
-        latest.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    (
+        latest.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
     try:
         fs_for(path).delete(staging)
     except Exception:  # cleanup is best-effort; the merge itself is done
@@ -286,8 +264,12 @@ def delete_where(
         r[0] for r in survivors.select(partition_col).distinct().collect()
     }
     fully_deleted = [p for p in touched if p not in kept]
-    with _dynamic_overwrite(spark):
-        survivors.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    (
+        survivors.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
     fs = fs_for(path)
     for p in fully_deleted:
         part_dir = (

@@ -63,15 +63,45 @@ def test_out_of_process_client_select1_and_flagship(server):
 
 
 def test_error_surface(server):
+    """Analysis errors and runtime errors, including one raised in a later
+    partition, come back as 400s before any row is sent."""
     import urllib.error
+    import urllib.parse
     import urllib.request
 
-    with pytest.raises(urllib.error.HTTPError) as ei:
-        urllib.request.urlopen(
-            f"http://{server.host}:{server.port}/?query=SELECT%20bogus_col",
-            timeout=60,
-        )
-    assert ei.value.code == 400
+    for query in (
+        "SELECT%20bogus_col",
+        urllib.parse.quote(
+            "SELECT IF(id = 9, raise_error('boom'), id) FROM range(0, 10, 1, 4)"
+        ),
+    ):
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(
+                f"http://{server.host}:{server.port}/?query={query}",
+                timeout=60,
+            )
+        assert ei.value.code == 400
+
+
+def test_bad_request_parameters_are_400(server):
+    """A non-integer or negative ``max_result_rows`` and a non-integer
+    POST ``Content-Length`` get a 400, not a dropped connection."""
+    import http.client
+
+    def status(method: str, path: str, headers=(), body=None) -> int:
+        conn = http.client.HTTPConnection(server.host, server.port, timeout=60)
+        try:
+            conn.putrequest(method, path)
+            for key, value in headers:
+                conn.putheader(key, value)
+            conn.endheaders(body)
+            return conn.getresponse().status
+        finally:
+            conn.close()
+
+    assert status("GET", "/?query=SELECT%201&max_result_rows=abc") == 400
+    assert status("GET", "/?query=SELECT%201&max_result_rows=-1") == 400
+    assert status("POST", "/", [("Content-Length", "abc")], b"SELECT 1") == 400
 
 
 def test_post_body_query(server):
@@ -184,10 +214,10 @@ def test_show_databases_and_show_create_table_over_the_wire(server):
 
 
 def test_streaming_row_cap_truncates(server):
-    """The endpoint streams and enforces max_result_rows: a larger-than-
-    cap SELECT comes back with exactly the cap's rows, the advertised
-    limit header, and the truncation trailer (chunked encoding) — the
-    driver never materializes the full result (round-2 judge finding)."""
+    """The endpoint enforces max_result_rows: a larger-than-cap SELECT
+    comes back with exactly the cap's rows, the advertised limit header,
+    and the truncation trailer (chunked encoding). The driver collects at
+    most cap + 1 rows, never the full result (round-2 judge finding)."""
     import urllib.parse
     import urllib.request
 
@@ -234,6 +264,33 @@ def test_streaming_uncapped_small_result_not_truncated(server):
             raw += chunk
     assert b"X-Olap-Rows-Truncated: 0" in raw
     assert b"X-Olap-Rows-Sent: 25" in raw
+
+
+def test_result_encoding_of_typed_columns(server):
+    """TSV and JSONEachRow bytes for map, struct, array, decimal,
+    timestamp, double and NULL cells."""
+    import urllib.parse
+    import urllib.request
+
+    q = urllib.parse.quote(
+        "SELECT map(1, 'a') AS m, named_struct('a', 1) AS s, "
+        "array(1.0D, 2.5D) AS arr, CAST(1.5 AS DECIMAL(3, 2)) AS d, "
+        "TIMESTAMP_NTZ '2020-01-01 00:00:00' AS ts, 1.0D AS x, "
+        "CAST(NULL AS INT) AS n"
+    )
+
+    def get(params: str) -> str:
+        return urllib.request.urlopen(
+            f"http://{server.host}:{server.port}/?query={q}{params}", timeout=120
+        ).read().decode()
+
+    assert get("") == (
+        "{1: 'a'}\t{'a': 1}\t[1.0, 2.5]\t1.50\t2020-01-01 00:00:00\t1.0\t\\N\n"
+    )
+    assert get("&default_format=JSONEachRow") == (
+        '{"m": {"1": "a"}, "s": {"a": 1}, "arr": [1.0, 2.5], "d": "1.50", '
+        '"ts": "2020-01-01 00:00:00", "x": 1.0, "n": null}\n'
+    )
 
 
 def test_upsert_partition_scoped_over_the_wire(server, tmp_path):

@@ -326,3 +326,47 @@ def test_compact_recovery_restores_foreign_column_backups(spark, tmp_path):
         (r["day"], r["v"]) for r in spark.read.parquet(path).collect()
     } == before_rows, "foreign-column recovery lost the parked partition"
     assert not os.path.exists(os.path.join(path, ".compact_bak"))
+
+
+def test_partition_rewrites_leave_session_conf_alone(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Upsert, delete and the rollup refresh ask for dynamic partition
+    overwrite on the write itself and never set the session-wide
+    ``partitionOverwriteMode``: the threaded server runs every request on
+    one session, so a toggle there leaks into concurrent writes."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from olap_db_spark.operators.materialized import refresh_daily_rollup
+    from olap_db_spark.sources.writers import delete_where
+
+    keys = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+
+    path = str(tmp_path / "tbl")
+    schema = "day INT, k INT, ver INT"
+    spark.createDataFrame([(1, 1, 1), (2, 2, 1)], schema).write.partitionBy(
+        "day"
+    ).parquet(path)
+    upsert_partition_scoped(
+        spark,
+        spark.createDataFrame([(1, 1, 2)], schema),
+        path,
+        "day",
+        ["day", "k"],
+        "ver",
+    )
+    # still a dynamic overwrite: day=2 survives the day=1 rewrite
+    assert {
+        (r["day"], r["k"], r["ver"]) for r in spark.read.parquet(path).collect()
+    } == {(1, 1, 2), (2, 2, 1)}
+    assert delete_where(spark, path, "day", "k = 1") == [1]
+    assert refresh_daily_rollup(spark, sf_dir, str(tmp_path / "rollup"))
+    assert not [k for k in keys if "partitionOverwriteMode" in k], keys
+
