@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.events_ts import ts_daily_rollup
-from ..sources.writers import _read_parquet_if_exists
+from ..sources.writers import _overwrite_partitions, _read_parquet_if_exists
 
 
 def refresh_daily_rollup(
@@ -50,11 +50,5 @@ def refresh_daily_rollup(
     parts = [r[0] for r in fresh.select("day").distinct().collect()]
     if not parts:
         return []
-    (
-        fresh.localCheckpoint()  # never overwrite a path being read
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(sink_path)
-    )
+    _overwrite_partitions(fresh, sink_path, "day")
     return parts

@@ -13,7 +13,7 @@ database.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
@@ -40,19 +40,32 @@ def _read_parquet_if_exists(
         raise
 
 
-def _stage_and_read(
-    spark: SparkSession, df: DataFrame, path: str, suffix: str
-) -> tuple[DataFrame, str]:
-    """Materialize ``df`` through a sibling staging directory and hand
-    back a frame that reads the STAGED copy plus the staging path (the
-    caller deletes it when done). This is how every rewrite-in-place
-    breaks the read-own-source cycle: a streamed disk stage bounds memory
-    at any data size, where a pinned ``localCheckpoint`` unrolls whole
-    partition blocks in executor storage (the failure mode the sf100
-    probe measured on PageRank's edge table)."""
-    staging = path.rstrip("/") + suffix
-    df.write.mode("overwrite").parquet(staging)
-    return spark.read.parquet(staging), staging
+def _in_partitions(partition_col: str, values: list) -> Column:
+    """Rows whose ``partition_col`` is one of ``values``. NULL partition
+    values need an explicit isNull arm: isin() never matches NULL, so
+    without it the existing null-partition rows would be dropped while
+    dynamic overwrite still replaces that partition — silent data loss."""
+    col = F.col(partition_col)
+    cond = col.isin([v for v in values if v is not None])
+    if any(v is None for v in values):
+        cond = cond | col.isNull()
+    return cond
+
+
+def _overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
+    """Replace the partitions present in ``df`` and leave the rest alone.
+    ``df`` may read the very partitions it replaces: a dynamic overwrite
+    writes into a per-job ``.spark-staging-<id>`` directory and swaps the
+    partitions in only at job commit, after every task has read its
+    input. (A static overwrite deletes the target first and cannot.) The
+    mode is a per-write option, never the session conf, so concurrent
+    writes on the shared session are unaffected."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def write_partitioned(df: DataFrame, path: str, *cols: str) -> None:
@@ -102,41 +115,6 @@ def idempotent_append(
     return True
 
 
-def upsert_keep_latest(
-    spark: SparkSession,
-    incoming: DataFrame,
-    path: str,
-    key_cols: list[str],
-    order_col: str,
-) -> None:
-    """Merge/upsert with keep-latest semantics — the write-side of
-    ClickHouse's ReplacingMergeTree (SURVEY.md §2.3 "argmax-dedup"): union
-    existing+incoming, keep the highest ``order_col`` row per key (ties
-    broken by the order column only, so supply a unique one), rewrite.
-
-    Plain-Parquet scope: the rewrite is a full overwrite of the table (two
-    phases via a staging path since Spark can't overwrite its own input);
-    at 100 TB this becomes partition-scoped `replaceWhere` overwrites or a
-    table format with MERGE (Delta/Iceberg) — the dedup window logic is
-    identical."""
-    from pyspark.sql.window import Window
-
-    existing = _read_parquet_if_exists(spark, path)
-    unioned = incoming if existing is None else existing.unionByName(incoming)
-    w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
-    latest = (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    staged, staging = _stage_and_read(spark, latest, path, "._staging")
-    staged.write.mode("overwrite").parquet(path)
-    try:
-        fs_for(staging).delete(staging)
-    except Exception:  # cleanup is best-effort; the merge itself is done
-        pass
-
-
 def upsert_partition_scoped(
     spark: SparkSession,
     incoming: DataFrame,
@@ -146,15 +124,16 @@ def upsert_partition_scoped(
     order_col: str,
 ) -> list:
     """Partition-scoped keep-latest upsert — the `replaceWhere` analog for
-    a directory-partitioned Parquet table (the 100 TB form of
-    ``upsert_keep_latest``, which rewrites the whole sink).
+    a directory-partitioned Parquet table (the write side of ClickHouse's
+    ReplacingMergeTree, SURVEY.md §2.3 "argmax-dedup").
 
     Only partitions PRESENT IN ``incoming`` are read (partition-pruned
-    scan), merged (keep highest ``order_col`` per key), and atomically
-    replaced via dynamic partition overwrite; every other partition's
-    files are untouched bytes on disk (asserted by mtime+content in
-    tests/test_upsert.py). Assumes keys don't move between partitions —
-    the same contract `replaceWhere` imposes.
+    scan), merged (keep highest ``order_col`` per key, ties broken by the
+    order column only, so supply a unique one), and written straight back
+    to ``path`` with a dynamic partition overwrite; every other
+    partition's files are untouched bytes on disk (asserted by
+    mtime+content in tests/test_upsert.py). Assumes keys don't move
+    between partitions — the same contract `replaceWhere` imposes.
 
     Returns the list of replaced partition values."""
     from pyspark.sql.window import Window
@@ -166,38 +145,16 @@ def upsert_partition_scoped(
     if existing is None:
         unioned = incoming
     else:
-        # NULL partition values need an explicit isNull arm: isin() never
-        # matches NULL, so without it the existing null-partition rows
-        # would be dropped while dynamic overwrite still replaces that
-        # partition — silent data loss.
-        touched = F.col(partition_col).isin(
-            [p for p in parts if p is not None]
-        )
-        if any(p is None for p in parts):
-            touched = touched | F.col(partition_col).isNull()
-        unioned = existing.filter(touched).unionByName(incoming)
+        unioned = existing.filter(
+            _in_partitions(partition_col, parts)
+        ).unionByName(incoming)
     w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
     merged = (
         unioned.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    # Materialize through a staging DIRECTORY, not a pinned
-    # localCheckpoint: the overwrite below must not read from the path it
-    # replaces, and a disk stage bounds memory at any partition size
-    # (the checkpoint unroll is what OOM'd PageRank's edge table at the
-    # sf100 probe — same class). The stage is an ordinary streamed write.
-    latest, staging = _stage_and_read(spark, merged, path, "._upsert_staging")
-    (
-        latest.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    try:
-        fs_for(path).delete(staging)
-    except Exception:  # cleanup is best-effort; the merge itself is done
-        pass
+    _overwrite_partitions(merged, path, partition_col)
     return parts
 
 
@@ -224,63 +181,51 @@ def delete_where(
     analog; reference backend surface) for a directory-partitioned Parquet
     table — the GDPR/right-to-erasure shape at 100 TB.
 
-    Partition pruning decides which partitions can possibly hold matching
-    rows (the predicate is evaluated once against the distinct partition
-    values when it references only the partition column; otherwise every
-    partition holding matches is found with one pruned scan). Only those
-    partitions are rewritten without the matching rows, via dynamic
-    partition overwrite; untouched partitions stay byte-identical on
-    disk. Returns the list of rewritten partition values."""
+    One grouped aggregate finds the partitions holding matching rows and,
+    among them, the ones every row of which matches. Only the touched
+    partitions are rewritten without the matching rows, straight back to
+    ``path`` via dynamic partition overwrite; untouched partitions stay
+    byte-identical on disk. Returns the list of rewritten partition
+    values."""
     existing = _read_parquet_if_exists(spark, path)
     if existing is None:
         return []
-    cond = F.expr(predicate)
-    touched = [
-        r[0]
-        for r in existing.filter(cond).select(partition_col).distinct().collect()
-    ]
-    if not touched:
-        return []
-    in_touched = F.col(partition_col).isin([p for p in touched if p is not None])
-    if any(p is None for p in touched):
-        in_touched = in_touched | F.col(partition_col).isNull()
     # SQL DELETE removes rows where the predicate is TRUE; rows where it
     # evaluates to NULL must SURVIVE. A bare filter(~cond) drops them
     # (three-valued logic: NOT NULL → NULL → filtered out) — silent data
     # loss for e.g. `value > 100` against a NULL value row sharing a
     # rewritten partition with a match.
-    survivors, staging = _stage_and_read(
-        spark,
-        existing.filter(in_touched).filter(~F.coalesce(cond, F.lit(False))),
+    hit = F.coalesce(F.expr(predicate), F.lit(False))
+    flags = (
+        existing.groupBy(
+            partition_col, F.col(partition_col).cast("string").alias("dir_value")
+        )
+        .agg(F.max(hit).alias("touched"), F.min(hit).alias("emptied"))
+        .filter("touched")
+        .collect()
+    )
+    if not flags:
+        return []
+    touched = [r[0] for r in flags]
+    _overwrite_partitions(
+        existing.filter(_in_partitions(partition_col, touched)).filter(~hit),
         path,
-        "._delete_staging",
+        partition_col,
     )
     # Dynamic overwrite only rewrites partitions PRESENT in the output —
     # a partition whose every row matches the predicate would silently
     # keep its old files. Those are dropped explicitly (the DROP
     # PARTITION analog; on a real cluster this is the same filesystem
-    # delete against the partition directory).
-    kept = {
-        r[0] for r in survivors.select(partition_col).distinct().collect()
-    }
-    fully_deleted = [p for p in touched if p not in kept]
-    (
-        survivors.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
+    # delete against the partition directory), named by the rule Spark's
+    # writer uses: the value cast to string, column and value escaped
+    # (`a:b` lives in `tag=a%3Ab`), NULL as __HIVE_DEFAULT_PARTITION__.
+    part_dir = (
+        spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
     )
     fs = fs_for(path)
-    for p in fully_deleted:
-        part_dir = (
-            f"{path.rstrip('/')}/{partition_col}="
-            + ("__HIVE_DEFAULT_PARTITION__" if p is None else str(p))
-        )
-        fs.delete(part_dir)
-    try:
-        fs.delete(staging)
-    except Exception:  # cleanup is best-effort; the delete itself is done
-        pass
+    for r in flags:
+        if r["emptied"]:
+            fs.delete(f"{path.rstrip('/')}/{part_dir(partition_col, r['dir_value'])}")
     return touched
 
 

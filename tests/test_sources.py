@@ -110,26 +110,6 @@ def test_generator_value_domains(spark):
     assert agg["nd"] == 4
 
 
-def test_upsert_keep_latest(spark, tmp_path):
-    from olap_db_spark.sources.writers import upsert_keep_latest
-
-    path = str(tmp_path / "upsert")
-    v1 = spark.createDataFrame(
-        [(1, 10, "a"), (2, 10, "b")], "k LONG, ver LONG, val STRING"
-    )
-    upsert_keep_latest(spark, v1, path, ["k"], "ver")
-    v2 = spark.createDataFrame(
-        [(1, 20, "a2"), (3, 5, "c")], "k LONG, ver LONG, val STRING"
-    )
-    upsert_keep_latest(spark, v2, path, ["k"], "ver")
-    rows = {r["k"]: (r["ver"], r["val"]) for r in spark.read.parquet(path).collect()}
-    assert rows == {1: (20, "a2"), 2: (10, "b"), 3: (5, "c")}
-    # replay of v2 is a no-op (idempotent upsert)
-    upsert_keep_latest(spark, v2, path, ["k"], "ver")
-    rows2 = {r["k"]: (r["ver"], r["val"]) for r in spark.read.parquet(path).collect()}
-    assert rows2 == rows
-
-
 def test_idempotent_append_survives_empty_log_dir(spark, tmp_path):
     """An existing-but-empty log dir (failed first write) must read as
     'no log yet', not wedge ingest with UNABLE_TO_INFER_SCHEMA."""

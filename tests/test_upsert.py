@@ -4,9 +4,11 @@ round-1 judge's `replaceWhere` item)."""
 
 from __future__ import annotations
 
+import datetime
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from olap_db_spark.sources.writers import upsert_partition_scoped
@@ -152,6 +154,69 @@ def test_delete_where_null_predicate_rows_survive(spark, tmp_path):
         (r["id"], r["value"]) for r in spark.read.parquet(path).collect()
     }
     assert rows == {(2, None), (3, 50)}, rows
+
+
+@pytest.mark.parametrize(
+    "schema, value, disk_name",
+    [
+        ("p STRING, id INT", "a:b", "p=a%3Ab"),
+        (
+            "p TIMESTAMP_NTZ, id INT",
+            datetime.datetime(2024, 1, 1, 0, 0, 0, 500000),
+            "p=2024-01-01 00%3A00%3A00.5",
+        ),
+    ],
+    ids=["string", "timestamp"],
+)
+def test_delete_where_removes_escaped_partition_dir(
+    spark, tmp_path, schema, value, disk_name
+):
+    """A partition whose every row matches is removed from disk even when
+    Spark escapes its directory name (`a:b` lives in `p=a%3Ab`) or
+    renders its value differently from Python's str()."""
+    from olap_db_spark.sources.writers import delete_where
+
+    path = str(tmp_path / "tbl")
+    spark.createDataFrame(
+        [(value, 1), (value, 2), (None, 3)], schema
+    ).write.partitionBy("p").parquet(path)
+    assert os.path.isdir(os.path.join(path, disk_name))
+
+    touched = delete_where(spark, path, "p", "id < 3")
+    assert len(touched) == 1 and touched[0] is not None
+    assert not os.path.exists(os.path.join(path, disk_name))
+    assert [r["id"] for r in spark.read.parquet(path).collect()] == [3]
+
+
+def test_upsert_and_delete_on_file_uri(spark, tmp_path):
+    """Upsert and DELETE against a URI-schemed path: the in-place rewrite
+    and the removal of an emptied partition work through the Hadoop
+    FileSystem API (file:// is the sandbox's object-store stand-in), and
+    untouched partitions stay byte-identical."""
+    from olap_db_spark.sources.writers import delete_where
+
+    local = str(tmp_path / "uri_tbl")
+    path = "file://" + local
+    schema = "day INT, k INT, ver INT"
+    spark.createDataFrame(
+        [(1, 1, 1), (1, 2, 1), (2, 3, 1), (3, 4, 1)], schema
+    ).write.partitionBy("day").parquet(path)
+    day3 = _files_state(os.path.join(local, "day=3"))
+
+    assert upsert_partition_scoped(
+        spark,
+        spark.createDataFrame([(1, 1, 2)], schema),
+        path,
+        "day",
+        ["day", "k"],
+        "ver",
+    ) == [1]
+    assert sorted(delete_where(spark, path, "day", "k IN (2, 3)")) == [1, 2]
+    assert not os.path.exists(os.path.join(local, "day=2"))
+    assert {
+        (r["day"], r["k"], r["ver"]) for r in spark.read.parquet(path).collect()
+    } == {(1, 1, 2), (3, 4, 1)}
+    assert _files_state(os.path.join(local, "day=3")) == day3
 
 
 def test_delete_where_no_match_is_noop(spark, tmp_path):
@@ -334,7 +399,11 @@ def test_partition_rewrites_leave_session_conf_alone(
     """Upsert, delete and the rollup refresh ask for dynamic partition
     overwrite on the write itself and never set the session-wide
     ``partitionOverwriteMode``: the threaded server runs every request on
-    one session, so a toggle there leaks into concurrent writes."""
+    one session, so a toggle there leaks into concurrent writes. Each of
+    them also makes exactly one parquet write, to the table path itself:
+    the dynamic overwrite may read the partitions it replaces, so no
+    staging copy is written first."""
+    from pyspark.sql import DataFrameWriter
     from pyspark.sql.conf import RuntimeConfig
 
     from olap_db_spark.operators.materialized import refresh_daily_rollup
@@ -354,6 +423,15 @@ def test_partition_rewrites_leave_session_conf_alone(
     spark.createDataFrame([(1, 1, 1), (2, 2, 1)], schema).write.partitionBy(
         "day"
     ).parquet(path)
+
+    targets = []
+    real_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, target, *args, **kwargs):
+        targets.append(target)
+        return real_parquet(self, target, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
     upsert_partition_scoped(
         spark,
         spark.createDataFrame([(1, 1, 2)], schema),
@@ -366,7 +444,11 @@ def test_partition_rewrites_leave_session_conf_alone(
     assert {
         (r["day"], r["k"], r["ver"]) for r in spark.read.parquet(path).collect()
     } == {(1, 1, 2), (2, 2, 1)}
+    assert targets == [path]
     assert delete_where(spark, path, "day", "k = 1") == [1]
-    assert refresh_daily_rollup(spark, sf_dir, str(tmp_path / "rollup"))
+    assert targets == [path, path]
+    rollup = str(tmp_path / "rollup")
+    assert refresh_daily_rollup(spark, sf_dir, rollup)
+    assert targets == [path, path, rollup]
     assert not [k for k in keys if "partitionOverwriteMode" in k], keys
 
