@@ -197,7 +197,7 @@ def q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     left_semi would (SURVEY.md §2.3 joins row)."""
     from ..catalog import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("orders", "lineitem"))
     return spark.sql(_Q4_ORACLE)
 
 
@@ -221,7 +221,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact in both engines and the threshold comparison is deterministic."""
     from ..catalog import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("lineitem", "part"))
     return spark.sql(_Q17_ORACLE)
 
 

@@ -83,7 +83,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     back on partkey — the CTE is evaluated once per consumer branch and the
     broadcast dims (supplier/nation/region) never shuffle the fact side.
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("lineitem", "part", "supplier", "nation", "region"))
     return spark.sql(_Q2_ORACLE)
 
 
@@ -531,7 +531,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the scalar MAX is exact because both sides derive from the
     same order-independent integer sum (one identical double division).
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("lineitem", "supplier"))
     return spark.sql(_Q15_ORACLE)
 
 
@@ -611,7 +611,7 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey set; quantities are integer-valued doubles, so the HAVING
     threshold and the output sum are both exact.
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("customer", "orders", "lineitem"))
     return spark.sql(_Q18_ORACLE)
 
 
@@ -643,7 +643,7 @@ def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inner part filter broadcasts, so the chain is scan → two semi-joins
     with no repeated subquery execution.
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("supplier", "nation", "lineitem", "part"))
     return spark.sql(_Q20_ORACLE)
 
 
@@ -682,7 +682,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes a left-semi join, the NOT EXISTS a left-anti join, both on
     orderkey — three passes over lineitem, zero per-row subquery loops.
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("supplier", "lineitem", "orders", "nation"))
     return spark.sql(_Q21_ORACLE)
 
 
@@ -722,5 +722,5 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     between engines — the round-4 lesson applied to a WHERE clause). The
     NOT EXISTS anti-joins against a filtered orders slice.
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(_Q22_ORACLE)
