@@ -46,7 +46,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from .api import OlapEngine
+from .api import MUTATING_VERBS, OlapEngine, classify_statement
 
 #: server-wide default row cap per request; override per request with the
 #: ClickHouse-named ``max_result_rows`` query parameter.
@@ -121,8 +121,6 @@ class HttpSqlServer:
                     self.wfile.write(f"{len(data):x}\r\n".encode() + data + b"\r\n")
 
             def _run(self, query: str, q: dict) -> None:
-                from .api import MUTATING_VERBS, classify_statement
-
                 if not query:
                     self._reply(400, b"missing query\n")
                     return

@@ -4,6 +4,7 @@ exposes :8123; its drivers issue GET /?query=...)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -502,13 +503,27 @@ def test_table_root_confines_path_addressed_statements(spark, tmp_path):
         )
     eng = OlapEngine(SF, spark=spark, table_root=str(root))
     assert [r.version for r in eng.sql(f"SHOW VERSIONS FROM '{inside}'").collect()] == [1]
+
+    def files(p):
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), p), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, fs in os.walk(p)
+            for f in fs
+        )
+
+    before = files(outside)
     for stmt in (
         f"SHOW VERSIONS FROM '{outside}'",
         f"VACUUM '{outside}' KEEP 1",
         f"READ '{outside}' VERSION AS OF 1",
         f"VACUUM '{root}/../escapee' KEEP 1",
         f"RESTORE '{outside}' TO VERSION 1",
+        f"UPSERT INTO '{outside}' PARTITION BY k KEY (val) ORDER BY val "
+        "SELECT 1 AS k, 'y' AS val",
+        f"DELETE FROM '{outside}' PARTITION BY k WHERE val = 'x'",
+        f"OPTIMIZE '{outside}' PARTITION BY k",
     ):
         with pytest.raises(PermissionError):
             eng.sql(stmt)
     assert V.versions(outside) == [1]
+    assert files(outside) == before
