@@ -30,7 +30,7 @@ query execution is driver-coordinated either way — an out-of-process
 client (tested via a subprocess urllib client) gets true remote SQL
 access while the cluster does the work. At real scale the same handler
 runs next to the driver; concurrent requests become concurrent Spark
-jobs, scheduled by the existing fair scheduler.
+jobs. ``get_spark`` sets no ``spark.scheduler.mode``, so they run FIFO.
 
 Binding: loopback only by default. The endpoint executes arbitrary SQL
 with no authentication (the reference's ClickHouse at least has

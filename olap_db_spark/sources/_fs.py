@@ -1,15 +1,15 @@
 """Filesystem shim for the table-maintenance surface (versioned sink,
-compaction, partition DELETE): local-OS primitives for plain paths, the
-Hadoop FileSystem API for URI-schemed paths (``file://``, ``hdfs://``,
-``s3a://``, ...).
+compaction's file listing, partition DELETE): local-OS primitives for
+plain paths, the Hadoop FileSystem API for URI-schemed paths
+(``file://``, ``hdfs://``, ``s3a://``, ...).
 
 The reference reads and writes S3 throughout
 (`/root/reference/ranking_urls_ingestor.py:47-63`); rounds 1–7 shipped the
 maintenance surface local-only with loud URI rejections. This shim closes
 that gap: every control-plane file operation the maintenance code needs
-(tiny pointer/manifest reads and writes, directory listings, renames,
-recursive deletes) routes through ``org.apache.hadoop.fs.FileSystem`` when
-the path carries a scheme, so the same code serves an object-store table.
+(tiny pointer/manifest reads and writes, directory listings, recursive
+deletes) routes through ``org.apache.hadoop.fs.FileSystem`` when the path
+carries a scheme, so the same code serves an object-store table.
 
 Scale notes: all operations here are control-plane — O(versions) or
 O(partitions) metadata, never data-sized. The one semantic difference from
@@ -65,9 +65,6 @@ class _LocalFS:
             fh.write(text)
             fh.flush()
             os.fsync(fh.fileno())
-
-    def rename(self, src: str, dst: str) -> None:
-        os.rename(src, dst)
 
     def delete(self, path: str) -> None:
         if os.path.isdir(path):
@@ -163,10 +160,6 @@ class _HadoopFS:
             if not self._fs.rename(jsrc, jdst):
                 raise OSError(f"rename {tmp} -> {path} failed")
         self._fs.delete(jbak, False)  # swap landed; retire the fallback
-
-    def rename(self, src: str, dst: str) -> None:
-        if not self._fs.rename(self._Path(src), self._Path(dst)):
-            raise OSError(f"rename {src} -> {dst} failed")
 
     def delete(self, path: str) -> None:
         self._fs.delete(self._Path(path), True)

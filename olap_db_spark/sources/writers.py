@@ -13,10 +13,13 @@ database.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from olap_db_spark.catalog import _footer_schema
 from olap_db_spark.sources._fs import fs_for
 
 
@@ -29,11 +32,10 @@ def _read_parquet_if_exists(
     UNABLE_TO_INFER_SCHEMA, which must not wedge ingest forever). Any
     other failure (corrupt footer, permissions) RAISES: swallowing those
     turned transient read errors into silent data loss / duplicate
-    ingest in earlier drafts. Pass ``schema`` for known tables — it also
-    skips the inference footer scan."""
-    reader = spark.read.schema(schema) if schema else spark.read
+    ingest in earlier drafts. Without ``schema``, one Parquet footer read
+    in this process gives it (``catalog._footer_schema``): no Spark job."""
     try:
-        return reader.parquet(path)
+        return spark.read.schema(schema or _footer_schema(spark, path)).parquet(path)
     except AnalysisException as ex:
         if "PATH_NOT_FOUND" in str(ex) or "UNABLE_TO_INFER_SCHEMA" in str(ex):
             return None
@@ -236,71 +238,44 @@ def compact_partitions(
     target_bytes: int = 128 * 1024 * 1024,
 ) -> list:
     """Small-file compaction (the OPTIMIZE / ClickHouse merge analog) for
-    a directory-partitioned Parquet table — the table-maintenance job
-    every continuously appended 100 TB sink needs: steady
-    ``idempotent_append`` / streaming ingest leaves partitions fragmented
-    into per-batch files, and a scan's map parallelism + footer overhead
-    degrade with file COUNT, not data volume (the round-7 sf10 probe
-    measured the dual failure — too FEW row groups — capping a 32-core
-    scan at 7 tasks; both are layout repairs, not plan repairs).
+    a directory-partitioned Parquet table. A partition is rewritten only
+    when its file count exceeds ``ceil(partition_bytes / target_bytes)``,
+    the count its volume needs, and is coalesced to exactly that many
+    files (no shuffle). Untouched partitions stay byte-identical, rows
+    never change, and a re-run is a no-op unless merging improved
+    compression enough to cross a ``target_bytes`` multiple. The file
+    inventory is a driver-side listing through ``sources/_fs.py``.
 
-    A partition is rewritten only when its file count exceeds
-    ``ceil(partition_bytes / target_bytes)`` — the file count its data
-    volume actually needs; each rewritten partition is coalesced to
-    exactly that many files. Untouched partitions stay byte-identical on
-    disk, rows are never changed, and re-running converges: a re-run is a
-    no-op unless merging improved compression enough to cross a
-    ``target_bytes`` multiple (dictionary pages dedup better in one
-    file), in which case at most one more rewrite settles the layout.
-    File inventory comes from a driver-side listing — control-plane
-    metadata, the same role a table format's manifest plays; one LIST per
-    partition prefix, via the local OS for plain paths or the Hadoop
-    FileSystem API for URI-schemed ones (``sources/_fs.py``), so
-    object-store tables compact with the same code.
+    All fragmented partitions are rewritten by ONE dynamic partition
+    overwrite (``_overwrite_partitions``, as UPSERT and DELETE do): one
+    Spark job. Each partition is read with its footer schema plus the
+    partition column as ``string``, so its directory name comes back
+    unchanged (an inferred ``int`` would turn ``p=01`` into ``p=1``). A
+    failed job leaves the table as it was. The crash window is Spark's
+    job commit, the same as UPSERT's and DELETE's: it deletes each
+    rewritten partition directory and renames the new one in, so a
+    driver that dies mid-commit leaves those partitions missing from the
+    table while their rows sit complete in ``.spark-staging-<id>``.
 
-    Each rewrite is STAGE-AND-SWAP: the coalesced partition streams into
-    a dot-prefixed staging directory (invisible to table scans), then the
-    live partition directory is swapped out by two renames. Memory stays
-    bounded at any partition size — the rewrite is an ordinary streaming
-    write, never a pinned ``localCheckpoint`` of the whole partition —
-    and the data files never contain the partition column, so the
-    partition directory name (and hence the column's inferred type) is
-    untouched. The swap window is two renames; a crash inside it leaves
-    the old partition parked in ``.compact_bak``, and the next
-    ``compact_partitions`` run RESTORES any partition whose backup exists
-    without a live directory before doing new work. Like the dynamic
-    partition overwrite it replaces, the swap is not atomic for
-    concurrent readers — maintenance jobs run against a quiesced table
-    (a table format's commit log is the upgrade for live swaps).
-
-    Returns the list of compacted partition values (as directory-encoded
-    strings)."""
+    A ``.compact_bak`` left by the earlier rename-swap compaction may
+    hold the only copy of a partition, so compaction raises while one
+    exists. Returns the compacted partition values, directory-encoded."""
     import math
 
     fs = fs_for(path)
     base = path.rstrip("/")
     if not fs.isdir(base):
         return []
-    stage_root = f"{base}/.compact_tmp"
-    bak_root = f"{base}/.compact_bak"
+    parked = f"{base}/.compact_bak"
+    if fs.exists(parked):
+        raise RuntimeError(
+            f"{parked} may hold the only copy of a partition: move each"
+            " entry whose partition directory is missing back into the"
+            " table, then delete it"
+        )
     prefix = f"{partition_col}="
 
-    # Crash recovery: a backup without a live partition directory means a
-    # prior run died between its two swap renames — restore it first.
-    # EVERY parked entry is restored, not just ones matching this call's
-    # partition_col: a later run invoked with a different column must not
-    # sweep another column's parked partition into the bak-root delete
-    # (an entry whose live directory exists is a post-swap leftover and
-    # is safe to discard with the root).
-    if fs.isdir(bak_root):
-        for entry in fs.listdir(bak_root):
-            live = f"{base}/{entry}"
-            if not fs.exists(live):
-                fs.rename(f"{bak_root}/{entry}", live)
-        fs.delete(bak_root)
-    fs.delete(stage_root)
-
-    todo: list[tuple[str, int]] = []  # (partition value string, want)
+    parts, compacted = [], []
     for entry in fs.listdir(base):
         pdir = f"{base}/{entry}"
         if not (entry.startswith(prefix) and fs.isdir(pdir)):
@@ -313,26 +288,10 @@ def compact_partitions(
         total = sum(fs.getsize(f) for f in files)
         want = max(1, math.ceil(total / target_bytes))
         if len(files) > want:
-            todo.append((entry, want))
-    if not todo:
-        return []
-    compacted = []
-    for entry, want in todo:
-        # One pruned scan per fragmented partition; coalesce (not
-        # repartition) — no shuffle, readers just concatenate splits. The
-        # staged write reads the old files while writing the new ones —
-        # distinct directories, so no read-own-source and no pinning.
-        live = f"{base}/{entry}"
-        staged = f"{stage_root}/{entry}"
-        spark.read.parquet(live).coalesce(want).write.mode(
-            "error"
-        ).parquet(staged)
-        fs.delete(f"{staged}/_SUCCESS")
-        fs.mkdirs(bak_root)
-        fs.rename(live, f"{bak_root}/{entry}")  # swap out…
-        fs.rename(staged, live)  # …swap in (crash here → recovery above)
-        fs.delete(f"{bak_root}/{entry}")
-        compacted.append(entry[len(prefix):])
-    fs.delete(stage_root)
-    fs.delete(bak_root)
+            schema = _footer_schema(spark, pdir).add(partition_col, "string")
+            read = spark.read.schema(schema).option("basePath", base).parquet(pdir)
+            parts.append(read.coalesce(want))
+            compacted.append(entry[len(prefix):])
+    if parts:
+        _overwrite_partitions(reduce(DataFrame.unionByName, parts), base, partition_col)
     return compacted

@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime
 import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -294,6 +295,12 @@ def test_compact_partitions_respects_target_bytes(spark, tmp_path):
     # target smaller than any single file → want >= n_files → no-op
     assert compact_partitions(spark, path, "day", target_bytes=1) == []
     assert _files_state(path) == state
+    # a target half the partition's bytes → exactly two files
+    total = sum(size for _, size, _ in state.values())
+    assert compact_partitions(
+        spark, path, "day", target_bytes=-(-total // 2)
+    ) == ["1"]
+    assert len(glob.glob(os.path.join(path, "day=1", "*.parquet"))) == 2
     # generous target → one file
     assert compact_partitions(spark, path, "day") == ["1"]
     assert len(glob.glob(os.path.join(path, "day=1", "*.parquet"))) == 1
@@ -301,9 +308,9 @@ def test_compact_partitions_respects_target_bytes(spark, tmp_path):
 
 
 def test_compact_partitions_on_file_uri(spark, tmp_path):
-    """The same compaction contract against a URI-schemed path — file
-    inventory, staging and the directory swap route through the Hadoop
-    FileSystem API (file:// is the sandbox's object-store stand-in)."""
+    """The same compaction contract against a URI-schemed path — the file
+    inventory and the footer reads route through the Hadoop FileSystem
+    API (file:// is the sandbox's object-store stand-in)."""
     from olap_db_spark.sources.writers import compact_partitions
 
     path = "file://" + str(tmp_path / "uri_tbl")
@@ -331,10 +338,135 @@ def test_compact_partitions_on_file_uri(spark, tmp_path):
     assert compact_partitions(spark, path, "day") == []
 
 
-def test_compact_partitions_crash_recovery(spark, tmp_path):
-    """A crash between the two swap renames leaves the old partition
-    parked in .compact_bak with no live directory; the next run must
-    restore it before doing new work — no data loss, layout unchanged."""
+def _tree_state(path: str) -> dict[str, tuple[int, int, bytes] | None]:
+    """Every file and directory under ``path``, hidden ones included:
+    (mtime, size, content) per file, None per directory."""
+    out = {}
+    for root, dirs, files in os.walk(path):
+        for d in dirs:
+            out[os.path.relpath(os.path.join(root, d), path)] = None
+        for f in files:
+            full = os.path.join(root, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = (
+                    os.stat(full).st_mtime_ns,
+                    os.path.getsize(full),
+                    fh.read(),
+                )
+    return out
+
+
+def _jobs_started(spark, tag: str, fn):
+    """Run ``fn`` with ``tag`` on this thread's jobs; return (result, the
+    ids of the Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.addJobTag(tag)
+    try:
+        result = fn()
+    finally:
+        sc.removeJobTag(tag)
+    return result, list(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+
+
+_ODD_VALUES = ["01", "a:b", "2024-01-01 00:00:00.5", None]
+
+
+def _fragmented_table(spark, path: str, files_per_partition: int = 4) -> None:
+    """Partitions ``_ODD_VALUES`` with ``files_per_partition`` files each,
+    plus one tidy single-file partition ``p=tidy``."""
+    for b in range(files_per_partition):
+        spark.createDataFrame(
+            [(v, 10 * b + i) for v in _ODD_VALUES for i in range(3)],
+            "p STRING, id INT",
+        ).coalesce(1).write.mode("append").partitionBy("p").parquet(path)
+    spark.createDataFrame(
+        [("tidy", i) for i in range(5)], "p STRING, id INT"
+    ).coalesce(1).write.mode("append").partitionBy("p").parquet(path)
+
+
+def test_compact_partitions_is_one_job(spark, tmp_path):
+    """One compaction over several fragmented partitions is one dynamic
+    partition overwrite: exactly one Spark job, whatever their count."""
+    from olap_db_spark.sources.writers import compact_partitions
+
+    path = str(tmp_path / "tbl")
+    _fragmented_table(spark, path)
+    compacted, jobs = _jobs_started(
+        spark,
+        "test_compact_partitions_is_one_job",
+        lambda: compact_partitions(spark, path, "p"),
+    )
+    assert len(compacted) == len(_ODD_VALUES)
+    assert len(jobs) == 1, jobs
+
+
+def test_compact_partitions_keeps_partition_names(spark, tmp_path):
+    """Zero-padded, escaped, timestamp-shaped and NULL partition values
+    keep their directory names and rows through a compaction (an inferred
+    partition type would rewrite ``p=01`` as ``p=1``); the tidy partition
+    stays byte- and mtime-identical, and a re-run does nothing."""
+    from olap_db_spark.sources.writers import compact_partitions
+
+    path = str(tmp_path / "tbl")
+    _fragmented_table(spark, path)
+    names = {
+        "p=01",
+        "p=a%3Ab",
+        "p=2024-01-01 00%3A00%3A00.5",
+        "p=__HIVE_DEFAULT_PARTITION__",
+    }
+
+    def dirs():
+        return {d for d in os.listdir(path) if d.startswith("p=")}
+
+    def rows():
+        df = spark.read.schema("id INT, p STRING").parquet(path)
+        return sorted((r["p"] or "", r["id"]) for r in df.collect())
+
+    assert dirs() == names | {"p=tidy"}
+    assert all(len(os.listdir(os.path.join(path, d))) >= 4 for d in names)
+    before_rows = rows()
+    tidy = _tree_state(os.path.join(path, "p=tidy"))
+
+    compacted = compact_partitions(spark, path, "p")
+    assert {f"p={v}" for v in compacted} == names
+    assert dirs() == names | {"p=tidy"}
+    for d in names:
+        assert len(glob.glob(os.path.join(path, d, "*.parquet"))) == 1, d
+    assert rows() == before_rows
+    assert _tree_state(os.path.join(path, "p=tidy")) == tidy
+    assert compact_partitions(spark, path, "p") == []
+
+
+def test_compact_partitions_failed_job_leaves_table(spark, tmp_path):
+    """A job that fails mid-rewrite (here: a truncated Parquet file in
+    the fragmented partition) changes no file of the table and leaves no
+    ``.spark-staging-*`` directory behind."""
+    from olap_db_spark.sources.writers import compact_partitions
+
+    path = str(tmp_path / "tbl")
+    for b in range(3):
+        spark.createDataFrame(
+            [(1, b * 10 + i) for i in range(10)], "day INT, v INT"
+        ).coalesce(1).write.mode("append").partitionBy("day").parquet(path)
+    good = sorted(glob.glob(os.path.join(path, "day=1", "*.parquet")))[0]
+    with open(good, "rb") as fh:
+        data = fh.read()
+    # sorts after the good files, so the footer schema still comes from one
+    with open(os.path.join(path, "day=1", "part-99999-cut.parquet"), "wb") as fh:
+        fh.write(data[: len(data) // 2])
+    before = _tree_state(path)
+
+    with pytest.raises(Exception):
+        compact_partitions(spark, path, "day")
+    assert _tree_state(path) == before
+    assert not glob.glob(os.path.join(path, ".spark-staging-*"))
+
+
+def test_compact_partitions_refuses_parked_backup(spark, tmp_path):
+    """A ``.compact_bak`` left by an interrupted rename-swap compaction
+    may hold the only copy of a partition: compaction raises, naming it,
+    and changes no file under the table."""
     import shutil
 
     from olap_db_spark.sources.writers import compact_partitions
@@ -342,55 +474,58 @@ def test_compact_partitions_crash_recovery(spark, tmp_path):
     path = str(tmp_path / "tbl")
     for b in range(4):
         spark.createDataFrame(
-            [(1, b * 10 + i) for i in range(10)], "day INT, v INT"
+            [(d, b * 10 + i) for d in (1, 2) for i in range(10)], "day INT, v INT"
         ).coalesce(1).write.mode("append").partitionBy("day").parquet(path)
-    before_rows = {
-        (r["day"], r["v"]) for r in spark.read.parquet(path).collect()
-    }
-    # simulate the crash window: partition swapped out, new one never in
-    os.makedirs(os.path.join(path, ".compact_bak"), exist_ok=True)
-    shutil.move(
-        os.path.join(path, "day=1"),
-        os.path.join(path, ".compact_bak", "day=1"),
-    )
-    assert not os.path.exists(os.path.join(path, "day=1"))
+    parked = os.path.join(path, ".compact_bak")
+    os.makedirs(parked)
+    shutil.move(os.path.join(path, "day=1"), os.path.join(parked, "day=1"))
+    before = _tree_state(path)
 
-    compacted = compact_partitions(spark, path, "day")
-    assert compacted == ["1"], "recovered partition not re-seen/compacted"
-    assert {
-        (r["day"], r["v"]) for r in spark.read.parquet(path).collect()
-    } == before_rows, "crash recovery lost rows"
-    assert not os.path.exists(os.path.join(path, ".compact_bak"))
-    assert not os.path.exists(os.path.join(path, ".compact_tmp"))
+    with pytest.raises(RuntimeError, match=re.escape(parked)):
+        compact_partitions(spark, path, "day")
+    assert _tree_state(path) == before
 
 
-def test_compact_recovery_restores_foreign_column_backups(spark, tmp_path):
-    """A parked partition must be restored even when the NEXT run names a
-    different partition column — recovery that filtered on the current
-    prefix would sweep another column's only copy into the bak-root
-    delete."""
-    import shutil
-
-    from olap_db_spark.sources.writers import compact_partitions
+def test_read_parquet_if_exists_starts_no_job(spark, tmp_path):
+    """Writer reads take their schema from a Parquet footer read on the
+    driver: no Spark job, and the same schema inference gives (partition
+    column included)."""
+    from olap_db_spark.sources.writers import _read_parquet_if_exists
 
     path = str(tmp_path / "tbl")
     spark.createDataFrame(
-        [(1, i) for i in range(10)], "day INT, v INT"
-    ).coalesce(1).write.mode("append").partitionBy("day").parquet(path)
-    before_rows = {
-        (r["day"], r["v"]) for r in spark.read.parquet(path).collect()
-    }
-    os.makedirs(os.path.join(path, ".compact_bak"), exist_ok=True)
-    shutil.move(
-        os.path.join(path, "day=1"),
-        os.path.join(path, ".compact_bak", "day=1"),
+        [(1, "a", 1.5), (2, "b", None)], "day INT, k STRING, x DOUBLE"
+    ).write.partitionBy("day").parquet(path)
+    df, jobs = _jobs_started(
+        spark,
+        "test_read_parquet_if_exists_starts_no_job",
+        lambda: _read_parquet_if_exists(spark, path),
     )
-    # a maintenance run keyed on a DIFFERENT column still restores day=1
-    assert compact_partitions(spark, path, "region") == []
-    assert {
-        (r["day"], r["v"]) for r in spark.read.parquet(path).collect()
-    } == before_rows, "foreign-column recovery lost the parked partition"
-    assert not os.path.exists(os.path.join(path, ".compact_bak"))
+    assert jobs == []
+    assert df.schema == spark.read.parquet(path).schema
+
+
+def test_writers_treat_empty_table_dir_as_absent(spark, tmp_path):
+    """An existing but empty table directory (a failed first write can
+    leave one) is "no table yet": UPSERT creates the table, DELETE is a
+    no-op."""
+    from olap_db_spark.sources.writers import delete_where
+
+    empty = str(tmp_path / "empty_delete")
+    os.makedirs(empty)
+    assert delete_where(spark, empty, "day", "k = 1") == []
+    assert os.listdir(empty) == []
+
+    path = str(tmp_path / "empty_upsert")
+    os.makedirs(path)
+    incoming = spark.createDataFrame(
+        [(1, 1, "a", 1), (1, 1, "b", 2)], "day INT, k INT, val STRING, ver INT"
+    )
+    assert upsert_partition_scoped(
+        spark, incoming, path, "day", ["day", "k"], "ver"
+    ) == [1]
+    rows = spark.read.parquet(path).collect()
+    assert [(r["val"], r["ver"]) for r in rows] == [("b", 2)]
 
 
 def test_partition_rewrites_leave_session_conf_alone(

@@ -267,7 +267,8 @@ def sf10_block(root: Path) -> str:
     note = str(head.get("note", "")).strip()
     note_clause = f" ({note.rstrip('.')})" if note else ""
     intro = (
-        f"`tools/gen_scale_probe.py 100` extends the same deterministic"
+        f"`tools/gen_scale_probe.py 100` (deleted; last at commit `d9b8935`) extends the same"
+        f" deterministic"
         f" replica\nconstruction to 100× sf0.1 (1.6 GB parquet, 600k"
         f" documents, 6M\nlineitem). {n} headline queries, one timed pass"
         f" each after warmup\n(`BENCH_sf10_headline.json`), total"
