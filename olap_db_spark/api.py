@@ -21,7 +21,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import TABLES, load, register_views
-from .session import get_spark
+from .session import get_spark, local_frame
 from .sources import versioned
 from .sources._fs import is_uri
 from .sources.writers import (
@@ -33,9 +33,17 @@ from .sources.writers import (
 
 
 def _column(spark: SparkSession, schema: str, values) -> DataFrame:
-    """The sorted one-column result frame of every verb but SHOW VERSIONS
-    and READ."""
-    return spark.createDataFrame([(v,) for v in sorted(values)], schema)
+    """The one-column result frame of every verb but SHOW VERSIONS and
+    READ: ``values`` sorted, NULL last, as a ``local_frame`` (a
+    ``LocalRelation``, so collecting the result starts no Spark job)."""
+    rows = [(v,) for v in sorted(values, key=lambda v: (v is None, v))]
+    return local_frame(spark, rows, schema)
+
+
+def _partition_names(parts) -> list:
+    """Partition values as the string result column reports them; a NULL
+    partition stays SQL NULL rather than the string ``'None'``."""
+    return [None if p is None else str(p) for p in parts]
 
 
 def _grammar(body: str) -> re.Pattern:
@@ -170,16 +178,20 @@ class OlapEngine:
         keys = [k.strip() for k in m["keys"].split(",")]
         df = self.spark.sql(m["select"])
         parts = upsert_partition_scoped(self.spark, df, path, m["pcol"], keys, m["ocol"])
-        return _column(self.spark, "replaced_partition string", map(str, parts))
+        return _column(
+            self.spark, "replaced_partition string", _partition_names(parts)
+        )
 
     def _delete(self, path: str, m: re.Match) -> DataFrame:
         parts = delete_where(self.spark, path, m["pcol"], m["pred"])
-        return _column(self.spark, "rewritten_partition string", map(str, parts))
+        return _column(
+            self.spark, "rewritten_partition string", _partition_names(parts)
+        )
 
     def _optimize(self, path: str, m: re.Match) -> DataFrame:
         kw = {"target_bytes": int(m["target"])} if m["target"] else {}
         parts = compact_partitions(self.spark, path, m["pcol"], **kw)
-        return _column(self.spark, "compacted_partition string", map(str, parts))
+        return _column(self.spark, "compacted_partition string", parts)
 
     def _vacuum(self, path: str, m: re.Match) -> DataFrame:
         kw = {"keep": int(m["keep"])} if m["keep"] else {}
@@ -194,7 +206,7 @@ class OlapEngine:
     def _show_versions(self, path: str, m: re.Match) -> DataFrame:
         chain = versioned.versions(path)
         rows = [(v, v == chain[-1]) for v in chain]
-        return self.spark.createDataFrame(rows, "version long, is_head boolean")
+        return local_frame(self.spark, rows, "version long, is_head boolean")
 
     def _read_version(self, path: str, m: re.Match) -> DataFrame:
         return versioned.read_version(self.spark, path, int(m["version"]))

@@ -20,6 +20,8 @@ tests/test_kmeans.py.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,6 +42,19 @@ _DIM = 64
 # older — bounded executor storage at any session length.
 _LIVE_ASSIGNMENTS: list[DataFrame] = []
 _LIVE_ASSIGNMENTS_MAX = 2
+# The threaded HTTP server shares this module: fits on two request threads
+# must not interleave their append and evict.
+_LIVE_LOCK = threading.Lock()
+
+
+def _keep_live(frame: DataFrame) -> None:
+    """Register a persisted assignment and unpersist, exactly once each,
+    the ones pushed past the newest ``_LIVE_ASSIGNMENTS_MAX``."""
+    with _LIVE_LOCK:
+        _LIVE_ASSIGNMENTS.append(frame)
+        while len(_LIVE_ASSIGNMENTS) > _LIVE_ASSIGNMENTS_MAX:
+            _LIVE_ASSIGNMENTS.pop(0).unpersist()
+
 
 # auto-k: clusters sized so the within-cluster pair stage stays O(N·B).
 # k = max(_K, ceil(N / _TARGET_BLOCK)) — k grows linearly with the corpus,
@@ -264,9 +279,7 @@ def kmeans_fit_assign(
         final = final.select("vec_id", "cluster")
     final = final.persist()
     final.count()
-    _LIVE_ASSIGNMENTS.append(final)
-    while len(_LIVE_ASSIGNMENTS) > _LIVE_ASSIGNMENTS_MAX:
-        _LIVE_ASSIGNMENTS.pop(0).unpersist()
+    _keep_live(final)
     return final
 
 

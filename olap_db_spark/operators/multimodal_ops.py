@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
+from ..session import local_frame
 from ._materialize import materialize
 
 def with_binary_payload(docs: DataFrame) -> DataFrame:
@@ -1555,9 +1556,9 @@ def refresh_phash_index(
         .write.mode("overwrite")
         .parquet(_p(index_path, "classes"))
     )
-    spark.createDataFrame([(n_docs,)], "n_docs long").write.mode(
-        "overwrite"
-    ).parquet(_p(index_path, "meta"))
+    local_frame(spark, [(n_docs,)], "n_docs long").write.mode("overwrite").parquet(
+        _p(index_path, "meta")
+    )
     return True
 
 

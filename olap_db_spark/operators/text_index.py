@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
+from ..session import local_frame
 from .relevance import _bm25_score_topk, _tokens
 
 
@@ -221,9 +222,9 @@ def refresh_lsh_index(
     lsh_base_index(_shingled(docs)).write.mode("overwrite").parquet(
         _p(index_path, "classes")
     )
-    spark.createDataFrame([(n_docs,)], "n_docs long").write.mode(
-        "overwrite"
-    ).parquet(_p(index_path, "meta"))
+    local_frame(spark, [(n_docs,)], "n_docs long").write.mode("overwrite").parquet(
+        _p(index_path, "meta")
+    )
     return True
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_memory() -> str:
@@ -107,3 +107,23 @@ def get_spark(
         except OSError:
             pass
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A frame of driver-held ``rows`` (tuples) with the schema ``ddl``.
+
+    ``spark.createDataFrame(<list>)`` builds a Python RDD: every action on
+    it starts Python-worker tasks for values the driver already holds. A
+    ``pyarrow.Table`` below ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB) is planned as a ``LocalRelation`` instead, so collecting it
+    starts no job and writing it runs one JVM task. The Arrow path does
+    not depend on ``spark.sql.execution.arrow.pyspark.enabled``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

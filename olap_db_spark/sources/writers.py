@@ -6,9 +6,9 @@ at /root/reference/ingest.py:18, columnar native-TCP inserts at
 /root/reference/ranking_urls_ingestor.py:66-79) and tracks ingest-once
 flags in DynamoDB (:82-93). Spark-first: appends become Parquet appends,
 the `{locale}/{page}/{chunk}` S3 key choreography becomes
-``partitionBy``, and the flag store becomes an ingest-log table consulted
-with a broadcast anti-join — the same idempotency, minus the second
-database.
+``partitionBy``, and the flag store becomes an ingest-log table probed
+by batch id (row-level dedup is a left anti-join against the sink) — the
+same idempotency, minus the second database.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from olap_db_spark.catalog import _footer_schema
+from olap_db_spark.session import local_frame
 from olap_db_spark.sources._fs import fs_for
 
 
@@ -100,18 +101,19 @@ def idempotent_append(
     /root/reference/ranking_urls_ingestor.py:114 — a crash between the two
     re-ingests rather than drops, matching its at-least-once choice).
 
-    Returns True if the batch was written, False if skipped. The log read
-    is a metadata-sized scan; at 100 TB the log is a partitioned table and
-    the existence probe is a partition-pruned lookup."""
+    Returns True if the batch was written, False if skipped. The probe is
+    one Spark job: a plain ``collect()`` of the log rows matching
+    ``batch_id``, a tiny result since each batch id is logged once.
+    (``limit(1).count()`` took two under AQE: a map stage for the
+    limit's exchange, then the count.) The flag is a ``local_frame``, so
+    its append is one JVM task with no Python worker: 3 jobs for a new
+    batch on an existing log, 1 for a replay. At 100 TB the log is a
+    partitioned table and the probe is a partition-pruned lookup."""
     log = _read_parquet_if_exists(spark, log_path, schema=_LOG_SCHEMA)
-    already = (
-        log is not None
-        and log.filter(F.col("batch_id") == batch_id).limit(1).count() > 0
-    )
-    if already:
+    if log is not None and log.filter(F.col("batch_id") == batch_id).collect():
         return False
     df.write.mode("append").parquet(path)
-    spark.createDataFrame([(batch_id,)], _LOG_SCHEMA).write.mode("append").parquet(
+    local_frame(spark, [(batch_id,)], _LOG_SCHEMA).write.mode("append").parquet(
         log_path
     )
     return True

@@ -133,3 +133,69 @@ def test_semantic_dedup_block_cap(spark):
     capped = {(r["vec_a"], r["vec_b"]) for r in capped_rows}
     assert capped <= full, "sub-splitting invented pairs"
     assert capped, "cap collapsed the output entirely"
+
+
+def test_live_assignment_registry_is_thread_safe(monkeypatch):
+    """Concurrent fits (the threaded server shares the module) register
+    their assignments through one locked append+evict: every frame but
+    the newest ``_LIVE_ASSIGNMENTS_MAX`` is unpersisted exactly once, and
+    the registry never holds more than the cap."""
+    import sys
+    import threading
+    import time
+
+    from olap_db_spark.operators import kmeans
+
+    class Stub:
+        def __init__(self):
+            self.unpersists = 0
+
+        def unpersist(self):
+            time.sleep(0)  # yield to the other registering threads
+            self.unpersists += 1
+
+    class YieldingList(list):
+        """Gives up the GIL between the registry's steps, so an unlocked
+        append/evict interleaves across threads."""
+
+        def append(self, item):
+            super().append(item)
+            time.sleep(0)
+
+        def __len__(self):
+            time.sleep(0)
+            return super().__len__()
+
+    monkeypatch.setattr(kmeans, "_LIVE_ASSIGNMENTS", YieldingList())
+    frames = [[Stub() for _ in range(50)] for _ in range(8)]
+    sizes, errors = [], []
+    start = threading.Barrier(len(frames), timeout=60)
+
+    def register(batch):
+        start.wait()
+        try:
+            for f in batch:
+                kmeans._keep_live(f)
+                with kmeans._LIVE_LOCK:
+                    sizes.append(len(kmeans._LIVE_ASSIGNMENTS))
+        except Exception as ex:  # noqa: BLE001 - reported below
+            errors.append(ex)
+
+    threads = [threading.Thread(target=register, args=(b,)) for b in frames]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+
+    assert not errors
+    live = kmeans._LIVE_ASSIGNMENTS
+    assert len(live) == kmeans._LIVE_ASSIGNMENTS_MAX
+    assert max(sizes) <= kmeans._LIVE_ASSIGNMENTS_MAX
+    for f in (f for batch in frames for f in batch):
+        assert f.unpersists == (0 if any(f is g for g in live) else 1)
