@@ -191,7 +191,19 @@ class OlapEngine:
     def _optimize(self, path: str, m: re.Match) -> DataFrame:
         kw = {"target_bytes": int(m["target"])} if m["target"] else {}
         parts = compact_partitions(self.spark, path, m["pcol"], **kw)
-        return _column(self.spark, "compacted_partition string", parts)
+        # the writer returns directory names (`a%3Ab`, the default
+        # partition for NULL); decode them to the values UPSERT and
+        # DELETE report, by the inverse of Spark's own path rule
+        utils = (
+            self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        )
+        values = [
+            None if p == utils.DEFAULT_PARTITION_NAME() else utils.unescapePathName(p)
+            for p in parts
+        ]
+        return _column(
+            self.spark, "compacted_partition string", _partition_names(values)
+        )
 
     def _vacuum(self, path: str, m: re.Match) -> DataFrame:
         kw = {"keep": int(m["keep"])} if m["keep"] else {}
@@ -227,7 +239,7 @@ class OlapEngine:
         """Start the HTTP SQL endpoint (the reference's :8123 surface)
         over this engine; returns the started server (``.host``/``.port``
         attributes, ``.stop()`` to shut down). Loopback-only unless
-        ``allow_external=True``; ``max_rows`` caps rows per response."""
+        ``allow_external=True``."""
         from .server import HttpSqlServer  # server.py imports this module
 
         return HttpSqlServer(self, host, port, **kw).start()

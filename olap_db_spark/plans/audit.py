@@ -30,14 +30,6 @@ def has(df: DataFrame, needle: str) -> bool:
     return needle in plan_string(df)
 
 
-def pushed_filters(df: DataFrame) -> list[str]:
-    return re.findall(r"PushedFilters: \[([^\]]*)\]", plan_string(df))
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    return re.findall(r"ReadSchema: ([^\n]*)", plan_string(df))
-
-
 _FLAGSHIP_CHECKS = {
     "q1_pricing_summary": [
         ("filter pushdown", "PushedFilters: ["),

@@ -12,18 +12,18 @@ the SAME HTTP surface the reference's own clients speak, backed by
 - ``GET|POST /?query=...``          → result rows, TabSeparated (default)
 - ``...&default_format=JSONEachRow``→ one JSON object per row
 - ``...&max_result_rows=N``         → per-request row cap (ClickHouse's
-  setting of the same name; server default ``OLAP_HTTP_MAX_ROWS``)
+  setting of the same name; default ``MAX_ROWS``, 100 000)
 
 Results are COLLECTED, bounded by the row cap: every request runs
 ``df.limit(max_rows + 1).collect()`` before the status line, so analysis
 AND runtime errors come back as clean 400s, and the one extra row tells
 whether the cap truncated the result. Driver memory per request is
-bounded by ``max_rows + 1`` rows (default 100 000), not by the result
-size. The rows then go out with HTTP/1.1 chunked transfer encoding, 1024
-rows per chunk, and the chunked trailer section carries
-``X-Olap-Rows-Truncated`` (``1`` when the cap cut the result) and
-``X-Olap-Rows-Sent``. A client that disconnects does not cancel its
-running Spark job; the same row cap bounds that job.
+bounded by ``max_rows + 1`` rows, not by the result size. The kept rows
+go out as one body with a ``Content-Length``, and the row counts are
+ordinary response headers that any HTTP client reads:
+``X-Olap-Rows-Limit``, ``X-Olap-Rows-Truncated`` (``1`` when the cap cut
+the result) and ``X-Olap-Rows-Sent``. A client that disconnects does not
+cancel its running Spark job; the same row cap bounds that job.
 
 Server model: a stdlib ThreadingHTTPServer on an ephemeral port. Spark
 query execution is driver-coordinated either way — an out-of-process
@@ -41,16 +41,15 @@ user/password semantics), so a non-loopback bind requires the explicit
 from __future__ import annotations
 
 import json
-import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from .api import MUTATING_VERBS, OlapEngine, classify_statement
 
-#: server-wide default row cap per request; override per request with the
-#: ClickHouse-named ``max_result_rows`` query parameter.
-DEFAULT_MAX_ROWS = int(os.environ.get("OLAP_HTTP_MAX_ROWS", "100000"))
+#: row cap per response unless the request's ClickHouse-named
+#: ``max_result_rows`` parameter sets another
+MAX_ROWS = 100_000
 
 _LOOPBACK_HOSTS = ("127.0.0.1", "localhost", "::1", "")
 
@@ -79,7 +78,6 @@ class HttpSqlServer:
         engine: OlapEngine,
         host: str = "127.0.0.1",
         port: int = 0,
-        max_rows: int = DEFAULT_MAX_ROWS,
         allow_external: bool = False,
         allow_mutations: bool = False,
     ):
@@ -99,26 +97,28 @@ class HttpSqlServer:
                 "pass allow_external=True to opt in (loopback is the default)"
             )
         self.engine = engine
-        self.max_rows = max_rows
         self.allow_mutations = allow_mutations
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
-            protocol_version = "HTTP/1.1"  # required for chunked responses
+            protocol_version = "HTTP/1.1"  # keep-alive between requests
 
             def log_message(self, *a):  # noqa: N802 - quiet
                 pass
 
-            def _reply(self, code: int, body: bytes, ctype: str = "text/plain"):
-                self.send_response(code)
-                self.send_header("Content-Type", f"{ctype}; charset=utf-8")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def _chunk(self, data: bytes) -> None:
-                if data:
-                    self.wfile.write(f"{len(data):x}\r\n".encode() + data + b"\r\n")
+            def _reply(self, code: int, body: bytes, headers=()) -> None:
+                """The one writer of every response: status, headers with
+                the body's length, then the body."""
+                try:
+                    self.send_response(code)
+                    self.send_header("Content-Type", "text/plain; charset=utf-8")
+                    self.send_header("Content-Length", str(len(body)))
+                    for key, value in headers:
+                        self.send_header(key, value)
+                    self.end_headers()
+                    self.wfile.write(body)
+                except (BrokenPipeError, ConnectionResetError):
+                    self.close_connection = True
 
             def _run(self, query: str, q: dict) -> None:
                 if not query:
@@ -126,7 +126,7 @@ class HttpSqlServer:
                     return
                 fmt = (q.get("default_format") or ["TabSeparated"])[0]
                 try:
-                    max_rows = int((q.get("max_result_rows") or [outer.max_rows])[0])
+                    max_rows = int((q.get("max_result_rows") or [MAX_ROWS])[0])
                 except ValueError:
                     max_rows = -1
                 if max_rows < 0:
@@ -152,28 +152,16 @@ class HttpSqlServer:
                     return
                 truncated = len(rows) > max_rows
                 del rows[max_rows:]
-                self.send_response(200)
-                self.send_header("Content-Type", "text/plain; charset=utf-8")
-                self.send_header("Transfer-Encoding", "chunked")
-                self.send_header("Trailer", "X-Olap-Rows-Truncated, X-Olap-Rows-Sent")
-                self.send_header("X-Olap-Rows-Limit", str(max_rows))
-                self.end_headers()
-                try:
-                    for i in range(0, len(rows), 1024):
-                        self._chunk(
-                            "".join(
-                                _encode_row(cols, row, fmt)
-                                for row in rows[i : i + 1024]
-                            ).encode("utf-8")
-                        )
-                    # last chunk + trailers
-                    self.wfile.write(
-                        b"0\r\n"
-                        + f"X-Olap-Rows-Truncated: {int(truncated)}\r\n"
-                          f"X-Olap-Rows-Sent: {len(rows)}\r\n\r\n".encode()
-                    )
-                except (BrokenPipeError, ConnectionResetError):
-                    pass
+                body = "".join(_encode_row(cols, row, fmt) for row in rows)
+                self._reply(
+                    200,
+                    body.encode("utf-8"),
+                    (
+                        ("X-Olap-Rows-Limit", str(max_rows)),
+                        ("X-Olap-Rows-Truncated", str(int(truncated))),
+                        ("X-Olap-Rows-Sent", str(len(rows))),
+                    ),
+                )
 
             def do_GET(self):  # noqa: N802
                 u = urlparse(self.path)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from ..operators.sketches import cms_cell_structs
+from ..operators.sketches import bloom_bitmap, cms_cell_structs
 
 _KEYS_SCHEMA = StructType([StructField("l_partkey", LongType())])
 
@@ -67,24 +67,4 @@ def bloom_bitmap_stream(keys: DataFrame) -> DataFrame:
     batch bitmap — and replays/duplicates are free (setting a bit twice is
     a no-op), which makes the state safe under at-least-once delivery.
     State is bounded BY CONSTRUCTION at ≤ _BLOOM_WORDS rows."""
-    from ..operators.sketches import _BLOOM_BITS, _BLOOM_K
-
-    cells = keys.select(
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(
-                        F.xxhash64(F.col("o_orderkey"), F.lit(j)),
-                        F.lit(_BLOOM_BITS),
-                    ).alias(f"p{j}")
-                    for j in range(_BLOOM_K)
-                ]
-            )
-        ).alias("pos")
-    ).select(
-        F.floor(F.col("pos") / 32).cast("long").alias("word_idx"),
-        (F.col("pos") % 32).cast("int").alias("bit"),
-    )
-    return cells.groupBy("word_idx").agg(
-        F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").alias("w")
-    )
+    return bloom_bitmap(keys, "o_orderkey")

@@ -111,6 +111,24 @@ def test_null_partitions_reported_as_null(spark, sf_dir, tmp_path):
     assert [(r.p, r.k) for r in left] == [("b", 2)]
 
 
+def test_optimize_and_delete_name_partitions_alike(spark, sf_dir, tmp_path):
+    """OPTIMIZE reports the partitions it compacts as values, the way
+    DELETE does: ``a:b`` (stored in ``p=a%3Ab``) and SQL NULL (stored in
+    the default partition), not their directory names."""
+    eng = OlapEngine(sf_dir, spark=spark)
+    tbl = str(tmp_path / "tbl")
+    for i in range(2):
+        spark.createDataFrame(
+            [("a:b", i), (None, i)], "p STRING, k INT"
+        ).write.mode("append").partitionBy("p").parquet(tbl)
+    optimized = eng.sql(f"OPTIMIZE '{tbl}' PARTITION BY p").collect()
+    deleted = eng.sql(f"DELETE FROM '{tbl}' PARTITION BY p WHERE k = 0").collect()
+    assert [r.compacted_partition for r in optimized] == ["a:b", None]
+    assert [r.rewritten_partition for r in deleted] == ["a:b", None]
+    left = spark.read.parquet(tbl).collect()
+    assert sorted((r.p or "", r.k) for r in left) == [("", 1), ("a:b", 1)]
+
+
 def test_idempotent_append_job_counts(spark, tmp_path):
     """On an existing log a new batch starts 3 jobs (probe, data, flag)
     and a replay 1 (the probe); the log holds exactly the ids written."""

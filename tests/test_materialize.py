@@ -7,31 +7,51 @@ an executor loss mid-query has a recompute path on a real cluster."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from olap_db_spark.operators._materialize import materialize
 
 SF = "/root/testdata/sf0.001"
 
+# A fresh session (the context checkpoint directory is sticky once any
+# test sets it) asking for the reliable path with no directory.
+_NO_DIRECTORY = """
+from pyspark.sql import SparkSession
+from olap_db_spark.operators._materialize import materialize
 
-def _sc_has_ckdir(spark) -> bool:
-    return spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.conf.set("spark.olap.reliableCheckpoint", "true")
+try:
+    materialize(spark.range(5))
+except ValueError as ex:
+    print(ex)
+finally:
+    spark.stop()
+"""
 
 
-def test_reliable_requires_a_directory(spark):
-    """The gate without any directory (conf or context) is a hard error,
-    not a silent local fallback. Must run before any test that sets the
-    context checkpoint dir (setCheckpointDir is session-sticky)."""
-    if _sc_has_ckdir(spark):
-        pytest.skip("context already has a checkpoint dir")
-    spark.conf.set("spark.olap.reliableCheckpoint", "true")
-    try:
-        with pytest.raises(ValueError, match="checkpoint"):
-            materialize(spark.range(5))
-    finally:
-        spark.conf.set("spark.olap.reliableCheckpoint", "false")
+def test_reliable_requires_a_directory():
+    """The gate without a context checkpoint directory is a hard error,
+    not a silent local fallback; the message names both ways to set one."""
+    root = Path(__file__).resolve().parents[1]
+    out = subprocess.run(
+        [sys.executable, "-c", _NO_DIRECTORY],
+        cwd=root,
+        env={**os.environ, "PYTHONPATH": str(root)},
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    ).stdout
+    assert "spark.checkpoint.dir" in out
+    assert "SparkContext.setCheckpointDir" in out
 
 
 def test_default_is_local_checkpoint(spark, tmp_path):
@@ -45,8 +65,8 @@ def test_default_is_local_checkpoint(spark, tmp_path):
 def reliable(spark, tmp_path):
     """Flip the gate on around a test, restoring the conf after."""
     ckdir = str(tmp_path / "ck")
+    spark.sparkContext.setCheckpointDir(ckdir)
     spark.conf.set("spark.olap.reliableCheckpoint", "true")
-    spark.conf.set("spark.olap.checkpointDir", ckdir)
     try:
         yield ckdir
     finally:
@@ -64,6 +84,13 @@ def test_reliable_path_writes_checkpoint_files(spark, reliable):
         found += [os.path.join(root, f) for f in files]
     assert found, f"no reliable checkpoint files under {local}"
     assert sorted(r["v"] for r in df.collect()) == [3 * i for i in range(100)]
+    # the checkpointed frame is pinned at the requested storage level
+    assert df.storageLevel == StorageLevel.MEMORY_AND_DISK
+    disk = materialize(spark.range(10), storage=StorageLevel.DISK_ONLY)
+    assert disk.storageLevel == StorageLevel.DISK_ONLY
+    assert not materialize(spark.range(10), storage=None).is_cached
+    df.unpersist()
+    disk.unpersist()
 
 
 def test_query_equal_under_reliable_checkpoint(spark, reliable):

@@ -1,4 +1,9 @@
-"""Driver simulation: consume __spark_entry__ exactly as the driver does."""
+"""Driver simulation: consume __spark_entry__ exactly as the driver does.
+
+    python tools/drive_contract.py [name ...]
+
+With no names every declared query is oracle-checked; names select a subset.
+"""
 import sys, json, hashlib
 sys.path.insert(0, "/root/repo")
 import __spark_entry__ as e
@@ -30,8 +35,9 @@ def vhash(cols, rows):
     return hashlib.md5("\n".join(lines).encode()).hexdigest()
 
 failures = []
-for name, fn in sorted(qs.items()):
+for name in sys.argv[1:] or sorted(qs):
     try:
+        fn = qs[name]
         sdf = fn(spark, "/root/testdata/sf0.01")
         srows = [tuple(r) for r in sdf.collect()]
         if name in oracles:
